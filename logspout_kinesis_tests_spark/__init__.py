@@ -17,7 +17,7 @@ package re-expresses that capability surface Spark-first:
                    (the driver's correctness surface).
 - ``streaming``  — Structured Streaming wrap: micro-batch sink with
                    batching/partition-key routing/bounded retry (reference
-                   producer semantics), pacing, checkpointing, stats.
+                   producer semantics), pacing, checkpointing.
 
 Reference parity map: see SURVEY.md §2 (operators A1-A25, C1-C13).
 """

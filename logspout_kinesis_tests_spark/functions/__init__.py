@@ -1,23 +1,1 @@
-from logspout_kinesis_tests_spark.functions.scalars import (
-    cid_prefix,
-    rfc3339,
-    split_image_name,
-    split_image_tag,
-    strip_leading_slash,
-)
-from logspout_kinesis_tests_spark.functions.vectors import (
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-)
-
-__all__ = [
-    "cid_prefix",
-    "rfc3339",
-    "split_image_name",
-    "split_image_tag",
-    "strip_leading_slash",
-    "cosine_similarity",
-    "dot_product",
-    "l2_norm",
-]
+"""Expression builders; import the defining module (e.g. ``functions.scalars``)."""

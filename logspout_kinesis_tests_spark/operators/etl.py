@@ -108,8 +108,14 @@ def serialize_json(df: DataFrame, msg_col: str = "msg") -> DataFrame:
 
 def parse_consumed(df: DataFrame, schema, value_col: str = "value") -> DataFrame:
     """A14: consumer-side JSON decode.  PERMISSIVE mode: malformed input
-    yields NULL structs rather than failing the query (the Spark analogue of
-    the reference's log-and-continue, logspoutkinesis.go:201-216)."""
+    never fails the query (the Spark analogue of the reference's
+    log-and-continue, logspoutkinesis.go:201-216).  Most malformed input,
+    including most truncations, yields a struct of NULL fields.  But Spark's
+    JSON partial results mean a record can parse *partially*: a v1 payload
+    cut right after a key inside its trailing ``docker`` object parses with
+    ``@timestamp``/``host``/``message`` set and ``docker`` NULL.  Pass the
+    fields a good record must carry to :func:`quarantine_split`'s
+    ``required`` to reject such records."""
     return df.withColumn(
         "parsed",
         F.from_json(F.col(value_col).cast("string"), schema, {"mode": "PERMISSIVE"}),

@@ -14,7 +14,9 @@ nonetheless made for a real multi-executor cluster at ~100 TB:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -39,6 +41,9 @@ RUNTIME_CONFS: dict[str, str] = {
 #: application ids the package zip has already been shipped to.
 _SHIPPED: set[str] = set()
 
+#: the package zip this process wrote; ``None`` until the first ship.
+_ZIP_PATH: str | None = None
+
 
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
@@ -48,19 +53,22 @@ def ship_package(spark: SparkSession) -> None:
     they live in an importable module — the worker must import
     ``logspout_kinesis_tests_spark`` itself.  That works only if the driver
     process happened to start in the repo directory.  Zipping the package
-    once per application and ``addPyFile``-ing it removes the cwd
-    dependency on any cluster (workers fetch the zip and prepend it to
-    ``sys.path``).
+    once per process and ``addPyFile``-ing it once per application removes
+    the cwd dependency on any cluster (workers fetch the zip and prepend it
+    to ``sys.path``).
     """
+    global _ZIP_PATH
     sc = spark.sparkContext
     app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"logspout_kinesis_tests_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
+    if _ZIP_PATH is None:
+        # a fresh directory, never a PID-derived name: a recycled PID would
+        # pick up the zip an earlier process left and ship that process's code
+        zdir = tempfile.mkdtemp(prefix="logspout_kinesis_tests_spark_")
+        atexit.register(shutil.rmtree, zdir, True)  # ignore_errors
+        zpath = os.path.join(zdir, "logspout_kinesis_tests_spark.zip")
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
         with zipfile.ZipFile(zpath, "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 if "__pycache__" in root:
@@ -70,7 +78,8 @@ def ship_package(spark: SparkSession) -> None:
                         full = os.path.join(root, fn)
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         z.write(full, rel)
-    sc.addPyFile(zpath)
+        _ZIP_PATH = zpath
+    sc.addPyFile(_ZIP_PATH)
     _SHIPPED.add(app_id)
 
 

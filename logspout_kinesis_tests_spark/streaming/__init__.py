@@ -1,29 +1,1 @@
-from logspout_kinesis_tests_spark.streaming.batch_apply import (
-    apply_per_batch,
-    streaming_incremental_dedup,
-)
-from logspout_kinesis_tests_spark.streaming.joins import (
-    dedup_within_watermark,
-    stream_interval_join,
-)
-from logspout_kinesis_tests_spark.streaming.sink import (
-    FileRecordingClient,
-    make_batch_writer,
-)
-from logspout_kinesis_tests_spark.streaming.pipeline import (
-    attach_stats_listener,
-    console_pipeline,
-    produce_pipeline,
-)
-
-__all__ = [
-    "apply_per_batch",
-    "streaming_incremental_dedup",
-    "dedup_within_watermark",
-    "stream_interval_join",
-    "FileRecordingClient",
-    "make_batch_writer",
-    "attach_stats_listener",
-    "console_pipeline",
-    "produce_pipeline",
-]
+"""Streaming pipelines, sinks and sources; import the defining module."""

@@ -19,7 +19,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from logspout_kinesis_tests_spark.config import EngineConfig
 from logspout_kinesis_tests_spark.operators.etl import logstash_message, serialize_json
@@ -132,38 +132,3 @@ def console_pipeline(
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
-
-
-class StatsListener(StreamingQueryListener):
-    """A24: periodic throughput stats — the reference's StatInterval logger
-    (logspoutkinesis.go:155-161) is built into Structured Streaming's
-    progress events; this listener surfaces them."""
-
-    def __init__(self):
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event):  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        p = event.progress
-        self.progress.append(
-            {
-                "batch_id": p.batchId,
-                "num_input_rows": p.numInputRows,
-                "input_rows_per_second": p.inputRowsPerSecond,
-                "processed_rows_per_second": p.processedRowsPerSecond,
-            }
-        )
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
-
-
-def attach_stats_listener(spark: SparkSession) -> StatsListener:
-    listener = StatsListener()
-    spark.streams.addListener(listener)
-    return listener

@@ -36,6 +36,11 @@ from pyspark.sql import functions as F
 
 from logspout_kinesis_tests_spark.config import EngineConfig
 
+#: Kinesis PutRecords hard cap — records per API call (AWS service limit,
+#: not a reference constant; the reference's vendored batchproducer enforces
+#: the same limit internally).
+MAX_RECORDS_PER_PUT = 500
+
 
 class FileRecordingClient:
     """Test double for the Kinesis client: appends each ``put_records`` call
@@ -174,7 +179,7 @@ def _send_partition(
     buf: list[tuple[str, str]] = []
     for row in rows:
         buf.append((row["value"], row["partition_key"]))
-        if len(buf) >= config.max_records_per_put:
+        if len(buf) >= MAX_RECORDS_PER_PUT:
             flush(buf)
             buf = []
     flush(buf)
